@@ -972,33 +972,31 @@ private[graft] object QueriesStreamStore {
         val (factPath, dimPath) = (tmp.toString + "/fact", tmp.toString + "/dim")
         // the fact chain (create + upsert) and the dim chain (create +
         // upsert + delete) land in DISJOINT stores — overlap them
-        // (guide §2.6, the two-sided streaming tick's commit overlap;
-        // r17): the view advance below depends on both and stays after
-        // the join
-        import scala.concurrent.{Await, Future, blocking}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val factF = Future(blocking {
-          // fact v0 = all events; v1 re-values every third event
-          VersionedStore.create(ev, factPath)
-          VersionedStore.upsert(s, factPath,
-            ev.filter(col("event_id") % 3 === 0)
-              .withColumn("value", col("value") * 2))
-        })
-        // dim v0 = per-user weight; v1 reweights every 4th user,
-        // v2 deletes every 11th — exercising the A_old⋈ΔB leg with
-        // updates AND deletes
-        val dim0 = ev.select(col("user_email")).distinct()
-          .withColumn("ts", to_timestamp(lit("2024-01-01 00:00:00")))
-          .withColumn("weight", (col("user_email") % 5 + 1).cast("double"))
-        VersionedStore.create(dim0, dimPath, sortCols = Seq("user_email"))
-        VersionedStore.upsert(s, dimPath,
-          dim0.filter(col("user_email") % 4 === 0)
-            .withColumn("weight", col("weight") + 10),
-          keys = Seq("user_email"), sortCols = Seq("user_email"))
-        VersionedStore.delete(s, dimPath, col("user_email") % 11 === 0,
-          sortCols = Seq("user_email"))
-        Await.result(factF, Duration.Inf)
+        // (the two-sided streaming tick's commit overlap): the view
+        // advance below depends on both
+        graft.streaming.Streaming.overlap(
+          () => {
+            // fact v0 = all events; v1 re-values every third event
+            VersionedStore.create(ev, factPath)
+            VersionedStore.upsert(s, factPath,
+              ev.filter(col("event_id") % 3 === 0)
+                .withColumn("value", col("value") * 2))
+          },
+          () => {
+            // dim v0 = per-user weight; v1 reweights every 4th user,
+            // v2 deletes every 11th — exercising the A_old⋈ΔB leg with
+            // updates AND deletes
+            val dim0 = ev.select(col("user_email")).distinct()
+              .withColumn("ts", to_timestamp(lit("2024-01-01 00:00:00")))
+              .withColumn("weight", (col("user_email") % 5 + 1).cast("double"))
+            VersionedStore.create(dim0, dimPath, sortCols = Seq("user_email"))
+            VersionedStore.upsert(s, dimPath,
+              dim0.filter(col("user_email") % 4 === 0)
+                .withColumn("weight", col("weight") + 10),
+              keys = Seq("user_email"), sortCols = Seq("user_email"))
+            VersionedStore.delete(s, dimPath, col("user_email") % 11 === 0,
+              sortCols = Seq("user_email"))
+          })
         val a0 = VersionedStore.snapshot(s, factPath, Some(0))
           .select(col("user_email"), col("habit"), col("value"))
         val b0 = VersionedStore.snapshot(s, dimPath, Some(0))

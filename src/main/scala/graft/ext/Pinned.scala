@@ -143,24 +143,23 @@ object Pinned {
   def releaseAllScratch(): Unit = {
     var d = scratchDirs.poll()
     while (d != null) {
+      // a dir that cannot be deleted now is left for the OS; only
+      // non-fatal errors are swallowed, and an interrupt is re-flagged
+      // so the caller's thread still sees it
       try org.apache.commons.io.FileUtils.deleteDirectory(d)
-      catch { case _: Throwable => () }
+      catch {
+        case _: InterruptedException => Thread.currentThread().interrupt()
+        case scala.util.control.NonFatal(_) => ()
+      }
       d = scratchDirs.poll()
     }
   }
 
   private val scratchDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-  private lazy val scratchHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var d = scratchDirs.poll()
-      while (d != null) {
-        try org.apache.commons.io.FileUtils.deleteDirectory(d)
-        catch { case _: Throwable => () }
-        d = scratchDirs.poll()
-      }
-    }, "graft-scratch-cleanup"))
-  }
+  private lazy val scratchHook: Unit =
+    Runtime.getRuntime.addShutdownHook(
+      new Thread(() => releaseAllScratch(), "graft-scratch-cleanup"))
   private def registerScratch(dir: java.io.File): Unit = {
     scratchHook
     scratchDirs.add(dir)

@@ -469,8 +469,10 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       val mem = MemoryStream[(Timestamp, String, String, Double, Option[String], String)]
       def stream = mem.toDF()
         .toDF("ts", "user_email", "habit", "value", "notes", "source")
-      // tick 1: bootstrap
+      // tick 1: bootstrap, with one row double-submitted — the first
+      // tick must resolve within-tick duplicate keys like every later one
       mem.addData(
+        (ts("2024-01-01 10:00:00"), "a@x", "workout", 1.0, Some("n1"), "sheets"),
         (ts("2024-01-01 10:00:00"), "a@x", "workout", 1.0, Some("n1"), "sheets"),
         (ts("2024-01-02 10:00:00"), "b@x", "workout", 0.0, None, "sheets"))
       Streaming.upsertStream(stream, store, cp).awaitTermination()
@@ -481,7 +483,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
         (ts("2024-01-03 10:00:00"), "c@x", "mood", 7.0, Some("new"), "sheets"))
       Streaming.upsertStream(stream, store, cp).awaitTermination()
 
-      val out = graft.load.EventStore.read(s, store).collect()
+      val rows = graft.load.EventStore.read(s, store).collect()
+      assert(rows.length == 3, "one stored row per key, duplicates merged")
+      val out = rows
         .map(r => (r.getAs[String]("user_email"), r.getAs[String]("habit")) ->
           (r.getAs[Double]("value"), Option(r.getAs[String]("notes"))))
         .toMap
@@ -683,6 +687,80 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
           ((r.getAs[String]("name"), r.getAs[Double]("value")))).toMap
       assert(out == Map(1L -> (("a", 10.0)), 2L -> (("b2", 22.0)),
         4L -> (("d", 40.0))))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("overlap joins every branch before rethrowing — a failed branch " +
+      "leaves no sibling write running detached") {
+    assert(Streaming.overlap(() => 1, () => 2, () => 3) == Seq(1, 2, 3))
+    val dir = java.nio.file.Files.createTempDirectory("graft_overlap_")
+    val marker = dir.resolve("marker")
+    try {
+      val e = intercept[IllegalStateException](Streaming.overlap(
+        () => throw new IllegalStateException("boom"),
+        () => {
+          Thread.sleep(500)
+          java.nio.file.Files.write(marker, Array[Byte](1))
+          ()
+        }))
+      assert(e.getMessage == "boom")
+      assert(java.nio.file.Files.exists(marker),
+        "the sleeping sibling must have finished its write by the time " +
+          "the failure reaches the caller")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  private def cdcInputs = {
+    val s = spark
+    import s.implicits._
+    (Seq((1L, 10.0), (2L, 20.0)).toDF("event_id", "value"),
+      Seq((1L, 11.0, "U", 1L), (3L, 30.0, "I", 2L))
+        .toDF("event_id", "value", "op", "seq"))
+  }
+
+  test("replay: an empty tick list fails with a named requirement") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_noticks_")
+    try {
+      val (current, feed) = cdcInputs
+      val e = intercept[IllegalArgumentException](
+        Streaming.cdcStreamAvailableNow(spark, current, feed, Nil,
+          dir.toString, Streaming.nextQueryName("spec_noticks")))
+      assert(e.getMessage.contains("at least one tick"), e.getMessage)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("replay: staging clears the debris of an earlier failed staging " +
+      "into the same dir") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_restage_")
+    try {
+      val work = dir.resolve("work")
+      val staged = work.resolve("staged")
+      // debris: a flattened tick file of a foreign schema, and a
+      // half-written partitioned staging tree
+      val junk = Seq(("junk", 1)).toDF("x", "y").coalesce(1)
+      junk.write.parquet(dir.resolve("junk").toString)
+      junk.write.parquet(staged.resolve("_graft_stage_tmp")
+        .resolve("__graft_tick=0").toString)
+      val part = new java.io.File(dir.resolve("junk").toString).listFiles()
+        .find(_.getName.startsWith("part-")).get
+      java.nio.file.Files.move(part.toPath, staged.resolve("b000-000.parquet"))
+      val (current, feed) = cdcInputs
+      val out = Streaming.cdcStreamAvailableNow(s, current, feed,
+          Seq(1L, 2L), work.toString, Streaming.nextQueryName("spec_restage"))
+        .collect().map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("value"))
+        .toMap
+      assert(out == Map(1L -> 11.0, 2L -> 20.0, 3L -> 30.0))
+      val files = staged.toFile.list().filterNot(n =>
+        n.startsWith(".") || n.startsWith("_")).sorted.toSeq
+      assert(files == Seq("b000-000.parquet", "b001-000.parquet"), files)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
@@ -1624,6 +1702,184 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
         .agg(min(col("doc_id")).as("k")).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(keepers(rows(3L)) == 3L, "keeper = min doc_id per canonical")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("chaos: dedupStreamIncremental heals torn batch=0 corpus and " +
+      "pair ledgers on replay") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_chaosdd_")
+    val corpus = dir.resolve("corpus").toString
+    val pairs = dir.resolve("pairs").toString
+    val cp = dir.resolve("cp").toString
+    val textA = "the quick brown fox jumps over the lazy dog again and again"
+    try {
+      // plausible-but-wrong debris: a phantom corpus copy of the text
+      // tick 1 duplicates, and a phantom pair
+      tearTick(corpus, 0L, Seq((999L, textA)).toDF("doc_id", "text"))
+      tearTick(pairs, 0L, Seq((998L, 999L, 1.0)).toDF("id_a", "id_b", "jaccard"))
+      val mem = MemoryStream[(Long, String)]
+      def stream = mem.toDF().toDF("doc_id", "text")
+      mem.addData((1L, textA),
+        (2L, "completely different words in this one here today"))
+      Streaming.dedupStreamIncremental(stream, corpus, pairs, cp,
+        "doc_id", "text").awaitTermination()
+      mem.addData((3L, textA))
+      Streaming.dedupStreamIncremental(stream, corpus, pairs, cp,
+        "doc_id", "text").awaitTermination()
+      val ledger = s.read.parquet(pairs).select("id_a", "id_b")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(ledger == Set((1L, 3L)),
+        s"torn tick-0 debris must be truncated by the replay overwrite: $ledger")
+      assert(s.read.parquet(corpus).count() == 3)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("chaos: bandLedgerIngest heals torn batch=0 corpus, band and " +
+      "pair ledgers on replay") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_chaosband_")
+    val work = dir.resolve("state").toString
+    val textA = "the quick brown fox jumps over the lazy dog again and again"
+    try {
+      // debris a tick 1 probe would match: a phantom copy of textA in
+      // the corpus AND its real band rows in the signature ledger
+      val phantom = Seq((999L, textA)).toDF("doc_id", "text")
+      tearTick(s"$work/corpus", 0L, phantom)
+      tearTick(s"$work/bands", 0L,
+        graft.ext.Dedup.minhashBandRelation(phantom, "doc_id", "text"))
+      tearTick(s"$work/pairs", 0L,
+        Seq((998L, 999L, 1.0)).toDF("id_a", "id_b", "jaccard"))
+      val mem = MemoryStream[(Long, String)]
+      def stream = mem.toDF().toDF("doc_id", "text")
+      mem.addData((1L, textA),
+        (2L, "completely different words in this one here today"))
+      Streaming.bandLedgerIngest(stream, work, dir.resolve("cp").toString,
+        "doc_id", "text").awaitTermination()
+      mem.addData((3L, textA))
+      Streaming.bandLedgerIngest(stream, work, dir.resolve("cp").toString,
+        "doc_id", "text").awaitTermination()
+      val ledger = s.read.parquet(s"$work/pairs").select("id_a", "id_b")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(ledger == Set((1L, 3L)),
+        s"torn tick-0 debris must be truncated by the replay overwrite: $ledger")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("chaos: contaminationIngest heals a torn batch=0 match ledger " +
+      "on replay") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_chaoscon_")
+    val ledgerPath = dir.resolve("ledger").toString
+    try {
+      // a phantom contaminated position in an eval doc
+      tearTick(ledgerPath, 0L, Seq((100L, 3L)).toDF("doc_id", "i"))
+      val test = Seq((100L, "abcdefghij")).toDF("doc_id", "text")
+      val mem = MemoryStream[(Long, String)]
+      def stream = mem.toDF().toDF("doc_id", "text")
+      // tick 0 shares the window at position 1, tick 1 the one at 6
+      mem.addData((1L, "zzabcdezz"))
+      Streaming.contaminationIngest(stream, test, ledgerPath,
+        dir.resolve("cp").toString, "doc_id", "text", 5).awaitTermination()
+      mem.addData((2L, "qfghijq"))
+      Streaming.contaminationIngest(stream, test, ledgerPath,
+        dir.resolve("cp").toString, "doc_id", "text", 5).awaitTermination()
+      val hits = s.read.parquet(ledgerPath).select("doc_id", "i").distinct()
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(hits == Set((100L, 1L), (100L, 6L)),
+        s"torn tick-0 debris must be truncated by the replay overwrite: $hits")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("chaos: bm25Ingest heals torn batch=0 postings and lengths on " +
+      "replay; scores equal the one-pass index") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_chaosbm_")
+    val index = dir.resolve("index").toString
+    try {
+      // a phantom doc that would outscore every real one on "fox"
+      tearTick(s"$index/postings", 0L,
+        Seq((999L, "fox", 9L)).toDF("doc_id", "term", "tf"))
+      tearTick(s"$index/lens", 0L, Seq((999L, 1.0)).toDF("doc_id", "_dl"))
+      val docs = Seq(1L -> "the fox ran", 2L -> "a dog sat down",
+        3L -> "fox and fox again")
+      val mem = MemoryStream[(Long, String)]
+      def stream = mem.toDF().toDF("doc_id", "text")
+      mem.addData(docs.take(2): _*)
+      Streaming.bm25Ingest(stream, index, dir.resolve("cp").toString,
+        "doc_id", "text").awaitTermination()
+      mem.addData(docs.drop(2): _*)
+      Streaming.bm25Ingest(stream, index, dir.resolve("cp").toString,
+        "doc_id", "text").awaitTermination()
+      def scores(postings: org.apache.spark.sql.DataFrame,
+          lens: org.apache.spark.sql.DataFrame) =
+        graft.ext.TextAnalysis.bm25FromIndex(postings, lens, "doc_id",
+            Seq("fox"), topK = 10)
+          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val (p, l) = graft.ext.TextAnalysis.invertedIndex(
+        docs.toDF("doc_id", "text"), "doc_id", "text")
+      val got = scores(s.read.parquet(s"$index/postings").drop("batch"),
+        s.read.parquet(s"$index/lens").drop("batch"))
+      assert(got.keySet == Set(1L, 3L), s"phantom doc must be gone: $got")
+      assert(got == scores(p, l))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("chaos: ivfIngest heals a torn centroid bootstrap and torn " +
+      "batch=0 postings on replay") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_chaosivf_")
+    val work = dir.resolve("ivf").toString
+    try {
+      // tick 0 died mid-bootstrap: phantom centroids without _SUCCESS,
+      // and phantom postings in its own batch dir
+      val phantom = Seq((900L, Seq(-1.0f, 0.0f)), (901L, Seq(0.0f, -1.0f)))
+        .toDF("vec_id", "embedding")
+      phantom.coalesce(1).write.parquet(s"$work/centroids")
+      assert(new java.io.File(s"$work/centroids/_SUCCESS").delete())
+      tearTick(s"$work/postings", 0L,
+        Seq((900L, Seq(1.0f), 1.0, 900L)).toDF("nn_id", "cv", "cv_nrm", "cell"))
+      val vecs = Seq(1L -> Seq(1.0f, 0.1f), 2L -> Seq(0.1f, 1.0f),
+        3L -> Seq(0.9f, 0.2f), 4L -> Seq(0.2f, 0.8f), 5L -> Seq(1.0f, 0.0f))
+      val mem = MemoryStream[(Long, Seq[Float])]
+      def stream = mem.toDF().toDF("vec_id", "embedding")
+      mem.addData(vecs.take(3): _*)
+      Streaming.ivfIngest(stream, work, dir.resolve("cp").toString,
+        "vec_id", "embedding", nCentroids = 2).awaitTermination()
+      mem.addData(vecs.drop(3): _*)
+      Streaming.ivfIngest(stream, work, dir.resolve("cp").toString,
+        "vec_id", "embedding", nCentroids = 2).awaitTermination()
+      val cents = s.read.parquet(s"$work/centroids")
+      assert(cents.select("vec_id").as[Long].collect().toSet == Set(1L, 2L),
+        "the replayed tick 0 must rewrite the torn centroid bootstrap")
+      val all = vecs.toDF("vec_id", "embedding")
+      def cells(postings: org.apache.spark.sql.DataFrame) =
+        postings.select("nn_id", "cell").collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val expected = cells(graft.ext.Similarity.ivfAssign(all, "vec_id",
+        "embedding", graft.ext.Dedup.withNorm(all.filter(col("vec_id") <= 2),
+          "vec_id", "embedding", "cent_id", "ce")))
+      assert(cells(s.read.parquet(s"$work/postings")) == expected)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
